@@ -19,7 +19,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from pyspark_skyline_spark.operators.skyline import skyline
+from pyspark_skyline_spark.operators.skyline import ALGORITHMS, skyline
 from pyspark_skyline_spark.parser import parse_skyline_query
 from pyspark_skyline_spark.sources.tables import read_points_csv
 
@@ -38,8 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="pyspark_skyline_spark.cli")
     ap.add_argument("mode", choices=["batch", "stream"])
     ap.add_argument("query", help='e.g. "SKYLINE OF x1 MIN, x2 MAX"')
-    ap.add_argument("algo", nargs="?", default="auto",
-                    choices=["MR_DIM", "MR_GRID", "MR_ANGLE", "auto"])
+    ap.add_argument("algo", nargs="?", default="auto", choices=ALGORITHMS)
     ap.add_argument("param", nargs="?", type=int, default=None,
                     help="partitioning fan-out p (reference README.md:49)")
     ap.add_argument("--input", help="input file (csv: reference x1..xd format, or parquet)")

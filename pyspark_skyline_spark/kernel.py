@@ -23,16 +23,16 @@ reference's tuple-at-a-time Python loop, we
 2. pre-prune with a few pivot passes (each pivot is a guaranteed
    skyline point; everything it dominates dies in one vectorized sweep),
 3. run a single-pass incremental BNL over the survivors in ascending
-   dimension-sum order — in that order a later point can never dominate
-   an earlier kept one (dominance implies a strictly smaller sum), so
-   the kept set only grows and one pass suffices.
+   ``order_key`` order (ties broken lexicographically) — in that order a
+   later point can never dominate an earlier kept one, so the kept set
+   only grows and one pass suffices.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["to_min_space", "find_skyline_mask", "skyline_of_array"]
+__all__ = ["to_min_space", "order_key", "find_skyline_mask", "skyline_of_array"]
 
 #: senses accepted for each dimension
 MIN, MAX = "min", "max"
@@ -56,6 +56,21 @@ def to_min_space(values, sense: str) -> np.ndarray:
     return arr
 
 
+def order_key(a: np.ndarray) -> np.ndarray:
+    """Scan-order key of the min-space rows of ``a`` (n, d): the row sum
+    with every value clipped to ±``finfo.max / 2d`` first, so no partial
+    sum can overflow.
+
+    Monotone under dominance (q <= p everywhere implies key(q) <= key(p))
+    and NaN-free for NaN-free rows: the plain sum of a row holding both
+    +inf and -inf is NaN, which sorts last and would let a dominated row
+    be kept ahead of its dominator. Every caller that compares keys must
+    build them here.
+    """
+    lim = np.finfo(np.float64).max / (2 * max(a.shape[1], 1))
+    return np.clip(a, -lim, lim).sum(axis=1)
+
+
 def _min_matrix(cols, senses) -> np.ndarray:
     if len(cols) != len(senses):
         raise ValueError("cols and senses length mismatch")
@@ -77,14 +92,23 @@ def find_skyline_mask(cols, senses, prune_rounds: int = 8) -> np.ndarray:
     if n == 0:
         return mask
 
-    sums = a.sum(axis=1)
+    sums = order_key(a)
     order = np.argsort(sums, kind="stable")
-    s = a[order]  # rows in ascending sum order
-    ssum = sums[order]  # non-decreasing; same summation tree as kernels
+    sk = sums[order]
+    tied = np.nonzero(sk[1:] == sk[:-1])[0]
+    if len(tied):
+        # equal keys: break ties lexicographically, so a dominator (<=
+        # everywhere, < somewhere) precedes its victim even when the two
+        # land in different BNL chunks. Only the tied runs are re-sorted.
+        pos = np.union1d(tied, tied + 1)
+        sub = order[pos]
+        order[pos] = sub[np.lexsort((*a[sub].T[::-1], sums[sub]))]
+    s = a[order]  # rows in ascending key order
+    ssum = sums[order]  # non-decreasing
 
     alive = np.ones(n, dtype=bool)
-    # Pivot pre-prune: the first alive row in sum order is a guaranteed
-    # skyline point (any dominator would have a smaller sum and, by
+    # Pivot pre-prune: the first alive row in scan order is a guaranteed
+    # skyline point (any dominator would precede it and, by
     # transitivity, would have killed this row already). One vectorized
     # sweep removes everything it dominates.
     start = 0
@@ -100,7 +124,7 @@ def find_skyline_mask(cols, senses, prune_rounds: int = 8) -> np.ndarray:
         alive &= ~dead
         start += 1
 
-    # Chunked incremental BNL over survivors, ascending sum order: the
+    # Chunked incremental BNL over survivors, in scan order: the
     # kept set only grows (a later point can never dominate an earlier
     # kept one), so candidates are screened chunk-at-a-time against the
     # kept rows with one broadcasted comparison, then pairwise within
@@ -148,9 +172,9 @@ def _dominated_by(
     """For each row of C (m, d): is it dominated by any row of K (k, d)
     in min-space?
 
-    Requires ``sK`` non-decreasing (K sorted by row sum) and ``sC``/
-    ``sK`` computed by the same ``np.sum(axis=1)`` over the same d, so
-    that elementwise-≤ rows have monotone sums. Then a dominator of
+    Requires ``sK`` non-decreasing (K sorted by key) and ``sC``/``sK``
+    both built by ``order_key`` over the same d, so that elementwise-≤
+    rows have monotone keys. Then a dominator of
     C[i] can only sit at ``sK < sC[i]`` — or at ``sK == sC[i]`` when
     float rounding collapses the strict gap — so only the all-≤ matrix
     ``le`` is materialized ((m, k) bools, dimension-at-a-time); the

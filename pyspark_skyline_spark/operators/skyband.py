@@ -43,35 +43,26 @@ from pyspark_skyline_spark.operators.skyline import (
     _bucket,
     _compute_bounds,
     _minspace_exprs,
-    _normalize_dims,
+    _numeric_expr,
+    _prepare,
 )
 
 __all__ = ["k_skyband"]
 
 
-def _count_dominators_within(X: np.ndarray, block: int = 1024) -> np.ndarray:
-    """#dominators of each row among the rows of ``X`` (min-space:
-    dominance = <= everywhere AND < somewhere). Blocked O(n^2 d)."""
-    n = len(X)
-    out = np.zeros(n, dtype=np.int64)
-    for lo in range(0, n, block):
-        hi = min(lo + block, n)
-        # le[i, j]: row i <= block-row j everywhere; eq: equal everywhere
-        le = (X[:, None, :] <= X[None, lo:hi, :]).all(axis=2)
-        eq = (X[:, None, :] == X[None, lo:hi, :]).all(axis=2)
-        out[lo:hi] = (le & ~eq).sum(axis=0)
-    return out
-
-
 def _count_dominators_from(
     cand: np.ndarray, aud: np.ndarray, block: int = 1024
 ) -> np.ndarray:
-    """#rows of ``aud`` dominating each row of ``cand`` (min-space)."""
+    """#rows of ``aud`` dominating each row of ``cand`` (min-space:
+    dominance = <= everywhere AND < somewhere; a row never dominates its
+    coordinate-ties, so ``aud`` may be ``cand`` itself). Blocked
+    O(n^2 d)."""
     out = np.zeros(len(cand), dtype=np.int64)
     if len(aud) == 0:
         return out
     for lo in range(0, len(cand), block):
         hi = min(lo + block, len(cand))
+        # le[i, j]: aud row i <= cand row j everywhere; eq: equal everywhere
         le = (aud[:, None, :] <= cand[None, lo:hi, :]).all(axis=2)
         eq = (aud[:, None, :] == cand[None, lo:hi, :]).all(axis=2)
         out[lo:hi] = (le & ~eq).sum(axis=0)
@@ -92,7 +83,7 @@ def k_skyband(
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    dims = _normalize_dims(dims)
+    df, dims = _prepare(df, dims)
     d = len(dims)
     spark = df.sparkSession
     # Grid base sized for COUNTING, not skyline pruning: target ~4x
@@ -103,7 +94,6 @@ def k_skyband(
         2, math.ceil((4 * spark.sparkContext.defaultParallelism) ** (1.0 / d))
     )
 
-    df = df.filter(F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c, _ in dims)))
     bounds = _compute_bounds(df, dims)
     vs = _minspace_exprs(df, dims, bounds)
     digits = [_bucket(v, b) for v in vs]
@@ -116,20 +106,22 @@ def k_skyband(
         .withColumn("__id", F.monotonically_increasing_id())
         .localCheckpoint(eager=False)  # pin nondeterministic ids
     )
-    senses = [s for _, s in dims]
     # dimension table in min-space doubles: the kernels see MIN-sense
-    # values only (timestamps/dates already numeric via the minspace
-    # exprs, which are strictly monotone per dim)
+    # values only. The raw values, not the normalized keying exprs:
+    # normalizing can merge distinct values and turns ±inf into NaN
     dimtbl = keyed.select(
         "__id",
         "__cell",
-        *[v.cast("double").alias(f"__x{i}") for i, v in enumerate(vs)],
+        *[
+            (_numeric_expr(keyed, c) * (1.0 if s == "min" else -1.0)).alias(f"__x{i}")
+            for i, (c, s) in enumerate(dims)
+        ],
     )
     xcols = [f"__x{i}" for i in range(d)]
 
     def local_counts(pdf: pd.DataFrame) -> pd.DataFrame:
         X = pdf[xcols].to_numpy(dtype=np.float64)
-        cnt = _count_dominators_within(X)
+        cnt = _count_dominators_from(X, X)
         keep = cnt < k
         return pd.DataFrame(
             {

@@ -35,16 +35,32 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from pyspark_skyline_spark.kernel import _dominated_by, find_skyline_mask, to_min_space
+from pyspark_skyline_spark.kernel import _dominated_by, find_skyline_mask, order_key, to_min_space
 from pyspark_skyline_spark.parser import parse_skyline_query
 
 __all__ = ["skyline", "skyline_sql", "skyline_antijoin", "skyline_layers", "skyline_witness", "representative_skyline", "windowed_skyline", "warm_up", "ALGORITHMS"]
 
-ALGORITHMS = ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE", "auto")
+ALGORITHMS = ("MR_DIM", "MR_GRID", "MR_ANGLE", "auto")
+
+# Merge and combiner settings, read at call time by skyline()'s auto
+# selection (module constants, not per-call options).
+#: fan-in of the tree merge: one pass up to 256 cells, two up to 65536
+MERGE_FANOUT = 256
+#: "auto" | "tree" | "broadcast" (see ``_global_merge``)
+MERGE_STRATEGY = "auto"
+#: auto merge broadcast-filters a local-frontier count in (threshold, cap]
+BROADCAST_THRESHOLD = 8192
+BROADCAST_CAP = 2_000_000
+#: pre-shuffle combiner: None = on above ``SMALL_INPUT_BYTES``, else forced
+MAP_SIDE_COMBINE: bool | None = None
+#: estimated input size up to which the combiner stays off and a low-d
+#: input skips the merge probe
+SMALL_INPUT_BYTES = 4 * 1024**3
 
 _CELL = "__sky_cell"
+_OK = "__sky_ok"
 
 # Make our kernel module picklable by value so applyInPandas closures run
 # on executors that don't have the package on their PYTHONPATH.
@@ -76,6 +92,43 @@ def _normalize_dims(dims) -> list[tuple[str, str]]:
     if not out:
         raise ValueError("need at least one skyline dimension")
     return out
+
+
+def _prepare(df: DataFrame, dims, flag: bool = False):
+    """The skyline family's entry contract: normalize ``dims``, check
+    the columns exist, and apply the comparable-row guard.
+
+    A row is comparable iff none of its skyline dimensions is NULL or
+    NaN: NULL has no value, IEEE comparisons make NaN incomparable (a
+    kernel would keep every NaN row), and engines disagree on NaN
+    ordering. ±inf and -0.0 are ordinary values. Returns ``(df, dims)``
+    with the other rows filtered out or, with ``flag``, kept and marked
+    by a boolean ``__sky_ok`` column.
+    """
+    dims = _normalize_dims(dims)
+    for c, _ in dims:
+        if c not in df.columns:
+            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns {df.columns}")
+    guards = []
+    for c, _ in dims:
+        guards.append(f"`{c}` IS NOT NULL")
+        if df.schema[c].dataType.typeName() in ("double", "float"):
+            guards.append(f"NOT isnan(`{c}`)")
+    ok = F.expr(" AND ".join(guards))
+    return (df.withColumn(_OK, ok) if flag else df.filter(ok)), dims
+
+
+def _dominates(q: str, p: str, dims) -> Column:
+    """Row alias ``q`` dominates row alias ``p``: no worse in every
+    dimension and strictly better in at least one. Coordinate-tied rows
+    never dominate each other, so exact duplicates are all kept."""
+    no_worse = strictly_better = None
+    for c, sense in dims:
+        qc, pc = F.col(f"{q}.`{c}`"), F.col(f"{p}.`{c}`")
+        nw, sb = (qc <= pc, qc < pc) if sense == "min" else (qc >= pc, qc > pc)
+        no_worse = nw if no_worse is None else no_worse & nw
+        strictly_better = sb if strictly_better is None else strictly_better | sb
+    return no_worse & strictly_better
 
 
 def _numeric_expr(df: DataFrame, col: str):
@@ -135,27 +188,6 @@ def _mr_dim_key(vs, p: int):
     return _bucket(vs[0], p), p
 
 
-def _quantile_key(df: DataFrame, dims, p: int, relative_error: float = 0.01):
-    """Skew-resistant MR-DIM variant: cell boundaries from approximate
-    quantiles of the first dimension instead of equi-width over
-    (lo, hi) — equal-population cells regardless of the value
-    distribution (the reference's fixed-domain equi-width keying skews
-    with the data, SURVEY.md §4.3). Returns (key expr, ncells)."""
-    col0, _ = dims[0]
-    x = _numeric_expr(df, col0)
-    probs = [i / p for i in range(1, p)]
-    cuts = df.select(x.alias("__q")).approxQuantile("__q", probs, relative_error)
-    # strictly increasing cut points (duplicates collapse cells)
-    uniq: list[float] = []
-    for c in cuts:
-        if not uniq or c > uniq[-1]:
-            uniq.append(c)
-    key = F.lit(0).cast("long")
-    for c in uniq:
-        key = key + F.when(x > F.lit(float(c)), 1).otherwise(0)
-    return key, len(uniq) + 1
-
-
 def _mr_grid_key(vs, b: int):
     """MR-GRID packed cell id: per-dim min-space buckets, base-b packed
     (reference functions.py:76-135) as a native expression."""
@@ -190,9 +222,6 @@ def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
     ``_grid_surviving_cells``)."""
     import numpy as np
 
-    # NULL cell ids (a NULL dimension value yields a NULL key) are not
-    # comparable to any cell; callers must keep those rows unpruned
-    cells = [c for c in cells if c is not None]
     if not cells:
         return []
     ids = np.asarray(cells, dtype=np.int64)
@@ -237,17 +266,12 @@ def _grid_prune_grouped(
         for g, cells in groups.items()
         for cid in _surviving_cell_ids(cells, b, d)
     ]
-    # NULL cell ids are incomparable (NULL dim values): always keep them
-    surviving += [
-        (*g, None) for g, cells in groups.items() if any(c is None for c in cells)
-    ]
     if len(surviving) == len(rows):
         return keyed  # nothing pruned; skip the join
     surv_df = keyed.sparkSession.createDataFrame(surviving, schema=census.schema)
     # null-safe equality: groupBy keeps a NULL group, and a plain equi
     # semi-join would silently drop every row of a NULL-keyed group
-    # (NULL = NULL is never true); cell ids can be NULL too when a
-    # dimension value is NULL, so the cell term is null-safe as well
+    # (NULL = NULL is never true)
     cond = None
     for c in [*by, _CELL]:
         piece = keyed[c].eqNullSafe(surv_df[c])
@@ -279,7 +303,7 @@ def _mr_angle_key(vs, p: int):
 
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the plan (parquet footer stats when
-    available); used to auto-enable the map-side combiner."""
+    available); gates the map-side combiner and the merge probe."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - estimation is best-effort
@@ -287,6 +311,8 @@ def _estimated_bytes(df: DataFrame) -> int:
 
 
 def _pick_algo(algo: str, d: int) -> str:
+    if algo not in ALGORITHMS:
+        raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
     if algo != "auto":
         return algo
     # Report p.3: angular partitioning is the only scheme whose local
@@ -298,8 +324,6 @@ def _default_param(algo: str, d: int, parallelism: int) -> int:
     target = max(2, parallelism) * 4  # a few cells per core for balance
     if algo == "MR_DIM":
         return min(target, 4096)
-    if algo == "MR_DIM_Q":
-        return min(target, 256)  # one WHEN per cut point: keep the chain sane
     if algo == "MR_GRID":
         b = 2
         while b**d - (b - 1) ** d < target and b**d < 2**31 and b < 64:
@@ -312,7 +336,7 @@ def _default_param(algo: str, d: int, parallelism: int) -> int:
     raise ValueError(f"unknown algorithm {algo!r}")
 
 
-def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int, by=()):
+def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=()):
     """One per-(by + cell) skyline pass; keeps the cell col.
 
     The grouped kernel is Python/Arrow LATENCY-bound (per-group IPC
@@ -342,15 +366,14 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int
         n = df_keyed.sparkSession.sparkContext.defaultParallelism
 
     def fn(pdf):
-        mask = find_skyline_mask([pdf[c] for c in dim_cols], senses, prune_rounds)
-        return pdf[mask]
+        return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
 
     return (
         df_keyed.repartition(n, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
     )
 
 
-def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int, by=()):
+def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=()):
     """Combiner: reduce each Arrow batch with ONE batch-global kernel
     call BEFORE the shuffle, so the groupBy exchange only carries
     frontier candidates — the skyline analogue of map-side partial
@@ -368,18 +391,12 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int
             if len(pdf) == 0:
                 continue
             if not by:
-                mask = find_skyline_mask(
-                    [pdf[c] for c in dim_cols], senses, prune_rounds
-                )
-                yield pdf[mask]
+                yield pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
                 continue
             keep = np.zeros(len(pdf), dtype=bool)
             for gidx in pdf.groupby(list(by), dropna=False, sort=False).indices.values():
                 sub = pdf.iloc[gidx]
-                mask = find_skyline_mask(
-                    [sub[c] for c in dim_cols], senses, prune_rounds
-                )
-                keep[gidx[mask]] = True
+                keep[gidx[find_skyline_mask([sub[c] for c in dim_cols], senses)]] = True
             yield pdf[keep]
 
     return df_keyed.mapInPandas(fn, schema=schema)
@@ -387,21 +404,21 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int
 
 def _collect_minspace(cand: DataFrame, dim_cols, senses):
     """(K, sK) of the candidates' min-space dims, sorted by ascending
-    coordinate sum (dims only are collected, never full rows)."""
+    ``order_key`` (dims only are collected, never full rows)."""
     import numpy as np
 
     pdf = cand.select(*dim_cols).toPandas()
     K = np.column_stack(
         [to_min_space(pdf[c], s) for c, s in zip(dim_cols, senses)]
     )
-    sK = K.sum(axis=1)
+    sK = order_key(K)
     order = np.argsort(sK, kind="stable")
     return np.ascontiguousarray(K[order]), sK[order]
 
 
 def _filter_against(cand: DataFrame, K, sK, dim_cols, senses) -> DataFrame:
     """Drop every ``cand`` row dominated by any row of the broadcast
-    min-space matrix ``K`` (sorted by ascending sum) via mapInPandas."""
+    min-space matrix ``K`` (sorted by ascending key) via mapInPandas."""
     import numpy as np
 
     bc = cand.sparkSession.sparkContext.broadcast((K, sK))
@@ -415,8 +432,8 @@ def _filter_against(cand: DataFrame, K, sK, dim_cols, senses) -> DataFrame:
             C_all = np.column_stack(
                 [to_min_space(pdf[c], s) for c, s in zip(dim_cols, senses)]
             )
-            sC_all = C_all.sum(axis=1)
-            # ascending-sum chunk order: a chunk only needs the K prefix
+            sC_all = order_key(C_all)
+            # ascending-key chunk order: a chunk only needs the K prefix
             # with sums <= its max, so sorted chunks compare against
             # ~half of K on average instead of nearly all of it
             corder = np.argsort(sC_all, kind="stable")
@@ -428,7 +445,7 @@ def _filter_against(cand: DataFrame, K, sK, dim_cols, senses) -> DataFrame:
                 idx = corder[st : st + m_cap]
                 C = np.ascontiguousarray(C_all[idx])
                 sC = sC_all[idx]
-                # dominators need sum <= max(sC): slice the sorted K
+                # dominators need key <= max(sC): slice the sorted K
                 hi = int(np.searchsorted(sKb, sC[-1], side="right"))
                 if hi == 0:
                     continue
@@ -489,19 +506,9 @@ def skyline(
     algo: str = "auto",
     partitions: int | None = None,
     bounds: dict[str, tuple[float, float]] | None = None,
-    merge_fanout: int = 256,
-    prune_rounds: int = 8,
     by: list[str] | None = None,
-    map_side_combine: bool | None = None,
-    merge_strategy: str = "auto",
-    broadcast_threshold: int = 8192,
-    broadcast_cap: int = 2_000_000,
 ) -> DataFrame:
     """Skyline of ``df`` under per-dimension MIN/MAX senses.
-
-    With ``by``, computes one independent skyline per group (grouped
-    skyline — composable with joins, e.g. per-segment order frontiers);
-    dominance is never compared across groups.
 
     Parameters
     ----------
@@ -515,51 +522,22 @@ def skyline(
         when None
     bounds : optional precomputed per-column (lo, hi) to skip the
         bounds pass
-    merge_fanout : fan-in of the tree merge (256 => one merge pass up to
-        256 cells, two up to 65536, ...; local frontiers are small, so a
-        wide fan-in saves whole passes)
-    prune_rounds : pivot pre-prune rounds inside the NumPy kernel
-    map_side_combine : pre-shuffle batch-level reduction (None = auto by
-        estimated input size: on for cluster-scale inputs where the
-        exchange is the bottleneck, off for small local runs)
-    merge_strategy : "auto" | "tree" | "broadcast". The tree merge's
-        final fold runs the whole frontier through ONE applyInPandas
-        group — fine for typical frontiers, minutes-single-threaded for
-        the huge ones (high-d / anticorrelated data). "auto"
-        materializes the local frontiers (localCheckpoint), counts
-        them, and switches to ``_broadcast_final_filter`` when the
-        count is in (broadcast_threshold, broadcast_cap]; outside that
-        range (or for grouped skylines, whose parallelism comes from
-        groups) it tree-merges. The probe job itself is skipped (straight
-        to tree) for small low-d inputs — estimated input <= 4 GiB and
-        d <= 4 — where the wall frontier shape cannot occur and the
-        probe is pure per-query overhead. "broadcast" forces the
-        parallel filter, "tree" forces the fold (also the >cap fallback
-        — frontiers past the cap are never collected).
+    by : optional group columns: one independent skyline per group
+        (dominance is never compared across groups)
 
-    Rows with NULL in any skyline dimension are excluded (SQL
-    ``NOT EXISTS`` oracle semantics need the same guard).
+    Rows failing the comparable-row guard (NULL or NaN in a skyline
+    dimension, see ``_prepare``) are excluded.
     """
-    dims = _normalize_dims(dims)
-    for c, _ in dims:
-        if c not in df.columns:
-            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns {df.columns}")
+    df, dims = _prepare(df, dims)
+    algo = _pick_algo(algo, len(dims))
+    return _skyline(df, dims, algo, partitions, bounds, by, _estimated_bytes(df))
+
+
+def _skyline(df: DataFrame, dims, algo: str, partitions, bounds, by, est: int) -> DataFrame:
+    """``skyline`` of an input ``_prepare`` already guarded, with a
+    resolved ``algo`` and the input's size estimate ``est`` (taken once
+    by the caller)."""
     d = len(dims)
-    algo = _pick_algo(algo, d)
-    if algo not in ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE"):
-        raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
-
-    # NULL dims are excluded (SQL NOT EXISTS oracle semantics); NaN dims
-    # too — IEEE comparisons make NaN rows incomparable (the kernel
-    # would keep every one of them), and engines disagree on NaN
-    # ordering, so the only portable semantics is "no value, no row"
-    guards = []
-    for c, _ in dims:
-        guards.append(f"`{c}` IS NOT NULL")
-        if df.schema[c].dataType.typeName() in ("double", "float"):
-            guards.append(f"NOT isnan(`{c}`)")
-    df = df.filter(F.lit(True) & F.expr(" AND ".join(guards)))
-
     if bounds is None:
         bounds = _compute_bounds(df, dims)
     vs = _minspace_exprs(df, dims, bounds)
@@ -568,9 +546,7 @@ def skyline(
     parallelism = spark.sparkContext.defaultParallelism
     p = partitions or _default_param(algo, d, parallelism)
 
-    if algo == "MR_DIM_Q":
-        key, ncells = _quantile_key(df, dims, p)
-    elif algo == "MR_DIM":
+    if algo == "MR_DIM":
         key, ncells = _mr_dim_key(vs, p)
     elif algo == "MR_GRID":
         key, ncells = _mr_grid_key(vs, p)
@@ -585,11 +561,7 @@ def skyline(
         if by:
             keyed = _grid_prune_grouped(keyed, p, d, list(by))
         else:
-            survivors = _grid_surviving_cells(keyed, p, d)
-            # NULL cells (NULL dim values) are incomparable: keep them
-            keyed = keyed.filter(
-                F.col(_CELL).isNull() | F.col(_CELL).isin(survivors)
-            )
+            keyed = keyed.filter(F.col(_CELL).isin(_grid_surviving_cells(keyed, p, d)))
 
     dim_cols = [c for c, _ in dims]
     senses = [s for _, s in dims]
@@ -603,16 +575,12 @@ def skyline(
     # partial skylines) keeps this exact. No-op when the cell count
     # already saturates the cluster.
     # Grouped skylines with CALLER-SIZED cells (non-empty ``by`` AND an
-    # explicit SMALL ``partitions``) skip the salt (round 13): the
-    # guard's ncells-only arithmetic would salt a deliberately small
-    # cell count back up to parallelism x 4 sub-groups, defeating
-    # callers that size the split to known-small per-group populations
-    # (e.g. the post-stream frontier reduce: thousands of one-row
-    # pandas groups instead of one group per window). The skip is gated
-    # on ``partitions <= parallelism`` (ADVICE r13): a caller passing a
-    # LARGE partitions to increase parallelism is not vouching for
-    # small per-group populations, so the hot-by-group OOM guard stays;
-    # grouped calls at DEFAULT sizing keep it exactly as before.
+    # explicit ``partitions <= parallelism``) skip the salt: the guard's
+    # ncells-only arithmetic would salt a deliberately small cell count
+    # back up to parallelism x 4 sub-groups, defeating callers that size
+    # the split to known-small per-group populations (e.g. the
+    # post-stream frontier reduce). A LARGE explicit partitions is not
+    # such a promise, so the hot-group guard stays there.
     target_groups = max(2, parallelism) * 4
     salt_mod = (
         1
@@ -626,65 +594,68 @@ def skyline(
         keyed = keyed.withColumn(_CELL, F.col(_CELL) * F.lit(salt_mod) + salt)
         ncells *= salt_mod
 
-    if map_side_combine is None:
-        # auto: the combiner pays an extra Python/Arrow pass to shrink the
-        # exchange — worth it when the shuffle is network/disk-bound (big
-        # inputs on a cluster), a net loss for small local shuffles
-        map_side_combine = _estimated_bytes(df) > 4 * 1024**3
-    if map_side_combine:
-        # pre-shuffle combiner: the exchange only carries per-batch
-        # frontier survivors, not the whole table
-        keyed = _map_side_prereduce(keyed, dim_cols, senses, prune_rounds, by)
+    # the combiner pays an extra Python/Arrow pass to shrink the exchange:
+    # worth it when the shuffle is network/disk-bound (big inputs on a
+    # cluster), a net loss for small local shuffles
+    combine = est > SMALL_INPUT_BYTES if MAP_SIDE_COMBINE is None else MAP_SIDE_COMBINE
+    if combine:
+        keyed = _map_side_prereduce(keyed, dim_cols, senses, by)
 
-    out = _local_skyline_pass(keyed, dim_cols, senses, prune_rounds, by)
+    out = _local_skyline_pass(keyed, dim_cols, senses, by)
+    return _global_merge(out, dim_cols, senses, by, ncells, est).drop(_CELL)
 
-    if merge_strategy not in ("auto", "tree", "broadcast"):
-        raise ValueError(f"merge_strategy must be auto/tree/broadcast, got {merge_strategy!r}")
-    if merge_strategy == "auto" and d <= 4 and 0 < _estimated_bytes(df) <= 4 * 1024**3:
+
+def _global_merge(out: DataFrame, dim_cols, senses, by, ncells: int, est: int) -> DataFrame:
+    """Merge the local frontiers ``out`` (cell column still attached).
+
+    The tree merge's final fold runs the whole frontier through ONE
+    applyInPandas group — fine for typical frontiers, minutes
+    single-threaded for the huge ones (high-d / anticorrelated data).
+    ``MERGE_STRATEGY`` "auto" materializes the local frontiers, counts
+    them, and switches to ``_broadcast_final_filter`` when the count is
+    in (``BROADCAST_THRESHOLD``, ``BROADCAST_CAP``]; outside that range,
+    or for grouped skylines (whose parallelism comes from groups), it
+    tree-merges. "broadcast" forces the parallel filter, "tree" the fold
+    (also the past-cap fallback: such frontiers are never collected).
+    """
+    strategy = MERGE_STRATEGY
+    if strategy not in ("auto", "tree", "broadcast"):
+        raise ValueError(f"MERGE_STRATEGY must be auto/tree/broadcast, got {strategy!r}")
+    if strategy == "auto" and len(dim_cols) <= 4 and 0 < est <= SMALL_INPUT_BYTES:
         # Probe-skip gate (same size gate as the map-side combiner): the
-        # adaptive probe below costs one fixed extra job (checkpoint +
-        # count) before the merge — pure overhead at small SF (~+1 s per
-        # query in the r3 bench). A small LOW-d input cannot grow a
-        # frontier big enough to hit the tree's single-group wall, so go
-        # straight to the tree. High d keeps the probe regardless of
-        # size (frontier growth is exponential in d: the d=10/1e5 shape
-        # is ~8 MB of input but a 68k-point frontier — minutes in the
-        # tree's final fold, seconds broadcast-filtered), and large
-        # inputs keep it at any d (a 100 TB anticorrelated 2-d scan can
-        # still surface a multi-million-point frontier). A pathological
-        # small-but-all-frontier low-d input pays the tree fold; force
-        # merge_strategy="broadcast" to override. A FAILED size estimate
-        # (_estimated_bytes == 0) keeps the probe — unknown is not small.
-        merge_strategy = "tree"
-    if merge_strategy != "tree" and not by and ncells > 1:
-        # Adaptive global merge: materialize the (small relative to the
-        # input) local frontiers once, then pick the merge shape by
-        # candidate count. The lazy checkpoint materializes inside the
-        # count job (one extra job, not two) and the chosen merge path
-        # reuses the materialization instead of recomputing the pass.
+        # probe below costs one fixed extra job (checkpoint + count), and
+        # a small LOW-d input cannot grow a frontier big enough to hit
+        # the tree's single-group wall, so go straight to the tree. High
+        # d keeps the probe regardless of size (frontier growth is
+        # exponential in d: d=10/1e5 is ~8 MB of input but a 68k-point
+        # frontier — minutes in the tree's final fold, seconds
+        # broadcast-filtered), and large inputs keep it at any d. A
+        # FAILED size estimate (est == 0) keeps the probe — unknown is
+        # not small.
+        strategy = "tree"
+    if strategy != "tree" and not by and ncells > 1:
+        # The lazy checkpoint materializes inside the count job (one
+        # extra job, not two) and the chosen merge path reuses it.
         out = out.localCheckpoint(eager=False)
         n_cand = out.count()
-        if merge_strategy == "broadcast" or (
-            broadcast_threshold < n_cand <= broadcast_cap
-        ):
-            return _broadcast_final_filter(out, dim_cols, senses).drop(_CELL)
+        if strategy == "broadcast" or BROADCAST_THRESHOLD < n_cand <= BROADCAST_CAP:
+            return _broadcast_final_filter(out, dim_cols, senses)
 
     # Tree merge: repeatedly fold cell ids and re-run the kernel until a
     # single group remains. Replaces the reference's one-task global
     # reduce (src/jobs/batch_job.py:183-188) that its own report calls
     # the scaling wall (report p.3).
     while ncells > 1:
-        ncells = max(1, math.ceil(ncells / merge_fanout))
+        ncells = max(1, math.ceil(ncells / MERGE_FANOUT))
         out = out.withColumn(_CELL, F.pmod(F.col(_CELL), F.lit(ncells)))
-        out = _local_skyline_pass(out, dim_cols, senses, prune_rounds, by)
-
-    return out.drop(_CELL)
+        out = _local_skyline_pass(out, dim_cols, senses, by)
+    return out
 
 
 def skyline_antijoin(df: DataFrame, dims) -> DataFrame:
     """Skyline as a pure-Catalyst dominance ANTI-join — the declarative
     ``NOT EXISTS`` formulation (SURVEY.md §2.3): keep row p iff no row q
-    is at-least-as-good in every dimension and strictly better in one.
+    dominates it.
 
     This is a theta join, so Spark executes it as a broadcast
     nested-loop — O(n²) work with one side broadcast. It is the right
@@ -694,21 +665,8 @@ def skyline_antijoin(df: DataFrame, dims) -> DataFrame:
     whole-stage-codegen'd, zero-Python, and exactly mirrors the SQL
     oracle — a differential anchor for the kernel path.
     """
-    dims = _normalize_dims(dims)
-    for c, _ in dims:
-        if c not in df.columns:
-            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns {df.columns}")
-    df = df.filter(F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c, _ in dims)))
-    p, q = df.alias("p"), df.alias("q")
-    no_worse = None
-    strictly_better = None
-    for c, sense in dims:
-        qc, pc = F.col(f"q.`{c}`"), F.col(f"p.`{c}`")
-        nw = (qc <= pc) if sense == "min" else (qc >= pc)
-        sb = (qc < pc) if sense == "min" else (qc > pc)
-        no_worse = nw if no_worse is None else (no_worse & nw)
-        strictly_better = sb if strictly_better is None else (strictly_better | sb)
-    return p.join(q, no_worse & strictly_better, "left_anti")
+    df, dims = _prepare(df, dims)
+    return df.alias("p").join(df.alias("q"), _dominates("q", "p", dims), "left_anti")
 
 
 def skyline_witness(
@@ -727,23 +685,19 @@ def skyline_witness(
     theta-join + min-aggregate runs map-side against the full table:
     one broadcast, one shuffle-free scan, one hash aggregate keyed on
     ``id_col`` (which must be unique — the witness contract is
-    per-entity). Rows with NULL skyline dimensions are incomparable by
-    convention: they are outside the frontier and their witness is
-    NULL.
+    per-entity). Rows failing the comparable-row guard (``_prepare``)
+    are outside the frontier and their witness is NULL.
 
     Returns ``(id_col, *dim_cols, witness)``.
     """
-    dims = _normalize_dims(dims)
     if id_col not in df.columns:
         raise ValueError(f"id_col {id_col!r} not in DataFrame columns {df.columns}")
-    for c, _ in dims:
-        if c not in df.columns:
-            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns")
+    flagged, dims = _prepare(df, dims, flag=True)
+    dim_cols = [c for c, _ in dims]
     # lazy checkpoint: the guard count is the materializing job (same
     # one-job pattern as the adaptive merge in skyline())
     frontier = skyline(df, dims).select(
-        F.col(id_col).alias("__w_id"),
-        *[F.col(c).alias(f"__w_{i}") for i, (c, _) in enumerate(dims)],
+        F.col(id_col).alias("__w_id"), *dim_cols
     ).localCheckpoint(eager=False)
     n_frontier = frontier.count()
     if n_frontier > max_frontier:
@@ -752,19 +706,13 @@ def skyline_witness(
             "broadcasting it for the dominance join would not be safe "
             "(anticorrelated data can put most of the table on the frontier)"
         )
-    no_worse, strictly_better = None, None
-    for i, (c, sense) in enumerate(dims):
-        qc, pc = F.col(f"__w_{i}"), F.col(f"`{c}`")
-        nw = (qc <= pc) if sense == "min" else (qc >= pc)
-        sb = (qc < pc) if sense == "min" else (qc > pc)
-        no_worse = nw if no_worse is None else (no_worse & nw)
-        strictly_better = sb if strictly_better is None else (strictly_better | sb)
-    dim_cols = [c for c, _ in dims]
-    joined = df.select(id_col, *dim_cols).join(
-        F.broadcast(frontier), no_worse & strictly_better, "left"
+    joined = flagged.select(id_col, *dim_cols, _OK).alias("p").join(
+        F.broadcast(frontier.alias("q")),
+        F.col(f"p.{_OK}") & _dominates("q", "p", dims),
+        "left",
     )
-    return joined.groupBy(id_col, *[F.col(f"`{c}`") for c in dim_cols]).agg(
-        F.min("__w_id").alias("witness")
+    return joined.groupBy(*[F.col(f"p.`{c}`") for c in (id_col, *dim_cols)]).agg(
+        F.min("q.__w_id").alias("witness")
     )
 
 
@@ -934,7 +882,8 @@ def skyline_layers(
     dims,
     n_layers: int = 3,
     algo: str = "auto",
-    **skyline_kwargs,
+    partitions: int | None = None,
+    bounds: dict[str, tuple[float, float]] | None = None,
 ) -> DataFrame:
     """Onion-peeling skyline layers: layer 1 is the skyline, layer i the
     skyline of the input with layers 1..i-1 removed — the classic
@@ -955,42 +904,21 @@ def skyline_layers(
     """
     if n_layers <= 0:
         raise ValueError("n_layers must be positive")
-    dims_n = _normalize_dims(dims)
-    dim_cols = [c for c, _ in dims_n]
-    # one bounds pass for all peels: bounds only need to CONTAIN the
-    # data, and every remainder is a subset of df — saves one agg job
-    # per layer
-    if skyline_kwargs.get("bounds") is None:
-        skyline_kwargs["bounds"] = _compute_bounds(
-            df.filter(F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c, _ in dims_n))),
-            dims_n,
-        )
-    # hoist skyline()'s size-gated decisions out of the loop (round 13):
-    # each gate costs an optimizer pass (_estimated_bytes) PER CALL per
-    # layer, and every remainder is a subset of df, so df's estimate
-    # decides identically for all peels. Only the small-input fast path
-    # is pinned; large inputs keep the per-layer adaptive behavior.
-    # INTENTIONAL divergence (ADVICE r13): this estimate reads the RAW
-    # df while skyline()'s internal gates read the NULL/NaN-filtered
-    # input — the raw estimate is >= the filtered one, so near the
-    # 4 GiB threshold the hoist can only err toward keeping the
-    # adaptive (probe-paying) path, never toward unsafely pinning it.
-    est = _estimated_bytes(df)
-    if 0 < est <= 4 * 1024**3:
-        skyline_kwargs.setdefault("map_side_combine", False)
-        if len(dims_n) <= 4:
-            skyline_kwargs.setdefault("merge_strategy", "tree")
-    remainder = df
+    remainder, dims = _prepare(df, dims)
+    algo = _pick_algo(algo, len(dims))
+    dim_cols = [c for c, _ in dims]
+    # one bounds pass and one size estimate for all peels: every
+    # remainder is a subset of the first, so its bounds contain the data
+    # and the size-gated choices (combiner, probe skip) decide alike
+    if bounds is None:
+        bounds = _compute_bounds(remainder, dims)
+    est = _estimated_bytes(remainder)
     out: DataFrame | None = None
     for layer in range(1, n_layers + 1):
         # checkpoint each frontier: it feeds BOTH the peel anti-join and
         # the final union, and without the lineage cut the whole
-        # local-pass + merge pipeline re-executes per consumer (round-13
-        # profile: the final union re-ran every layer's kernel passes).
-        # A frontier is small relative to its dataset, so materializing
-        # it is cheap; measured with the hoisted gates above, the
-        # checkpointed loop is 3.4 s vs 4.5 s without at sf0.1.
-        front = skyline(remainder, dims_n, algo=algo, **skyline_kwargs).localCheckpoint(
+        # local-pass + merge pipeline re-executes per consumer.
+        front = _skyline(remainder, dims, algo, partitions, bounds, None, est).localCheckpoint(
             eager=False
         )
         tagged = front.withColumn("layer", F.lit(layer).cast("long"))

@@ -33,9 +33,9 @@ foreachBatch restart can produce still yields the exactly-once result.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark_skyline_spark.operators.skyline import skyline, skyline_antijoin
+from pyspark_skyline_spark.operators.skyline import _normalize_dims, skyline, skyline_antijoin
 from pyspark_skyline_spark.streaming import fsio
 
 __all__ = ["SkylineStreamState", "run_skyline_stream"]
@@ -74,7 +74,7 @@ class SkylineStreamState:
         spark: SparkSession | None = None,
         **skyline_kwargs,
     ):
-        self.dims = dims
+        self.dims = _normalize_dims(dims)
         self.algo = algo
         self.kwargs = skyline_kwargs
         self.state_dir = state_dir
@@ -135,18 +135,10 @@ class SkylineStreamState:
         """Reduce a MATERIALIZED (checkpointed) candidate pool to its
         skyline: a single codegen'd NOT-EXISTS anti-join when the pool
         is small (the common stage-2 shape — frontier emissions), the
-        partitioned kernel operator past ``_ANTIJOIN_MAX``. The two
-        forms are semantically identical (differential-tested); the
-        anti-join path replicates skyline()'s NaN guard explicitly
-        because ``skyline_antijoin`` alone only filters NULLs."""
+        partitioned kernel operator past ``_ANTIJOIN_MAX``. Both apply
+        the same comparable-row guard and dominance rule
+        (differential-tested)."""
         if cand.count() <= _ANTIJOIN_MAX:
-            nan_guards = [
-                f"NOT isnan(`{c}`)"
-                for c, _ in self.dims
-                if dict(cand.dtypes).get(c) in ("double", "float")
-            ]
-            if nan_guards:
-                cand = cand.filter(F.expr(" AND ".join(nan_guards)))
             return skyline_antijoin(cand, self.dims)
         return skyline(cand, self.dims, algo=self.algo, **self.kwargs)
 

@@ -22,7 +22,7 @@ import pickle
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from pyspark_skyline_spark.kernel import find_skyline_mask
@@ -30,7 +30,7 @@ from pyspark_skyline_spark.operators.skyline import (
     _CELL,
     _minspace_exprs,
     _mr_dim_key,
-    _normalize_dims,
+    _prepare,
 )
 
 __all__ = ["stateful_cell_skyline"]
@@ -41,7 +41,6 @@ def stateful_cell_skyline(
     dims,
     bounds: dict[str, tuple[float, float]],
     partitions: int = 32,
-    prune_rounds: int = 8,
 ) -> DataFrame:
     """Streaming DataFrame -> update-mode stream of per-cell local
     skylines (full input rows + ``__sky_cell``).
@@ -50,8 +49,9 @@ def stateful_cell_skyline(
     global frontier; every emitted row set is a superset-correct
     candidate pool (a point only ever leaves a frontier by being
     dominated, so skyline(union of emissions) == skyline(all input)).
+    Rows failing the comparable-row guard (NULL/NaN dims) are dropped.
     """
-    dims = _normalize_dims(dims)
+    stream_df, dims = _prepare(stream_df, dims)
     dim_cols = [c for c, _ in dims]
     senses = [s for _, s in dims]
 
@@ -71,10 +71,7 @@ def stateful_cell_skyline(
         if not batches:
             return
         merged = pd.concat(batches, ignore_index=True)
-        mask = find_skyline_mask(
-            [merged[c] for c in dim_cols], senses, prune_rounds
-        )
-        frontier = merged[mask]
+        frontier = merged[find_skyline_mask([merged[c] for c in dim_cols], senses)]
         state.update((pickle.dumps(frontier),))
         yield frontier
 

@@ -38,7 +38,7 @@ from pyspark_skyline_spark.operators.skyline import (
     _CELL,
     _minspace_exprs,
     _mr_dim_key,
-    _normalize_dims,
+    _prepare,
 )
 from pyspark_skyline_spark.streaming.watermark import _with_event_time
 
@@ -55,7 +55,6 @@ def windowed_stream_skyline(
     bounds: dict[str, tuple[float, float]],
     delay: str = "10 minutes",
     partitions: int = 8,
-    prune_rounds: int = 8,
 ) -> DataFrame:
     """Streaming DataFrame -> update-mode stream of per-(window, cell)
     local frontiers: input columns + ``window_start`` + ``__sky_cell``.
@@ -71,12 +70,9 @@ def windowed_stream_skyline(
     late-row filtering, so this operator drops later-than-watermark
     rows itself (inside the state function, against
     ``getCurrentWatermarkMs``) — the same late-data policy as
-    ``windowed_stream_stats``, applied explicitly.
+    ``windowed_stream_stats``, applied explicitly. Rows failing the
+    comparable-row guard (NULL/NaN dims) are dropped.
     """
-    dims = _normalize_dims(dims)
-    dim_cols = [c for c, _ in dims]
-    senses = [s for _, s in dims]
-
     # The state function compares NAIVE pandas datetimes (epoch of the
     # session-zone wall clock) against getCurrentWatermarkMs (UTC
     # epoch); any non-UTC session zone would silently shift the late-row
@@ -90,6 +86,9 @@ def windowed_stream_skyline(
             "naive event times as UTC epochs"
         )
 
+    stream_df, dims = _prepare(stream_df, dims)
+    dim_cols = [c for c, _ in dims]
+    senses = [s for _, s in dims]
     stream_df = _with_event_time(stream_df, ts_col)
     stream_df = stream_df.withWatermark(ts_col, delay)
 
@@ -125,8 +124,7 @@ def windowed_stream_skyline(
         if not batches:
             return
         merged = pd.concat(batches, ignore_index=True)
-        mask = find_skyline_mask([merged[c] for c in dim_cols], senses, prune_rounds)
-        frontier = merged[mask]
+        frontier = merged[find_skyline_mask([merged[c] for c in dim_cols], senses)]
         state.update((pickle.dumps(frontier),))
         # Expiry anchor: the timeout must exceed the current watermark,
         # and state kept past a window's close is only wasted memory, so

@@ -1,8 +1,10 @@
 """CLI (reference-compatible contract) + source builders."""
 
+import os
 import subprocess
 import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,49 +15,74 @@ from pyspark_skyline_spark.sources.streams import (
     kafka_json_sink_writer,
 )
 
-REF_CSV = "/root/reference/data/points_D_2_N_100_000.csv"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_cli_batch_csv(tmp_path):
+@pytest.fixture()
+def points_csv(tmp_path):
+    """Seeded stand-in for the reference's 2-d point file: the headerless
+    ``x1 INT, x2 INT`` CSV, 100 000 rows uniform on [0, 1e9]. Returns
+    (path, points)."""
+    pts = np.random.default_rng(2).integers(0, 10**9, size=(100_000, 2), endpoint=True)
+    path = tmp_path / "points.csv"
+    np.savetxt(path, pts, fmt="%d", delimiter=",")
+    return str(path), pts
+
+
+def sweep_skyline_2d(pts):
+    """MIN/MIN skyline of an (n, 2) int array by one sorted sweep, as a
+    sorted row list (exact duplicates are all kept)."""
+    s = pts[np.lexsort((pts[:, 1], pts[:, 0]))]  # by x1, then x2
+    x1, x2 = s[:, 0], s[:, 1]
+    first = np.searchsorted(x1, x1, side="left")  # start of each x1 group
+    # min x2 over the rows with a strictly smaller x1
+    before = np.concatenate(([np.iinfo(np.int64).max], np.minimum.accumulate(x2)))[first]
+    keep = (x2 == x2[first]) & (x2 < before)
+    return sorted(map(tuple, s[keep].tolist()))
+
+
+def run_cli(*args, timeout):
+    return subprocess.run(
+        [sys.executable, "-m", "pyspark_skyline_spark.cli", *args],
+        capture_output=True, text=True, timeout=timeout, cwd=REPO,
+    )
+
+
+def test_cli_batch_csv(spark, points_csv, tmp_path):
+    path, pts = points_csv
     out = tmp_path / "sky.parquet"
-    r = subprocess.run(
-        [
-            sys.executable, "-m", "pyspark_skyline_spark.cli",
-            "batch", "SKYLINE OF x1 MIN, x2 MIN", "MR_DIM", "8",
-            "--input", REF_CSV, "--dims", "2", "--output", str(out), "--cpus", "4",
-        ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+    r = run_cli(
+        "batch", "SKYLINE OF x1 MIN, x2 MIN", "MR_DIM", "8",
+        "--input", path, "--dims", "2", "--output", str(out), "--cpus", "4",
+        timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert "wrote 12 skyline rows" in r.stdout  # golden: 12 points (FIXTURES.md)
+    want = sweep_skyline_2d(pts)
+    got = sorted(tuple(r) for r in spark.read.parquet(str(out)).select("x1", "x2").collect())
+    assert got == want
+    assert f"wrote {len(want)} skyline rows" in r.stdout
 
 
-def test_cli_stream_mode(spark, sf_dir, tmp_path):
+def test_cli_stream_mode(spark, points_csv, tmp_path):
     # reference stream_job parity: the stream subcommand consumes a
     # directory through Structured Streaming and must produce the same
     # frontier as the batch path
+    path, pts = points_csv
     src = tmp_path / "pts_in"
     out = tmp_path / "sky_out"
-    pts = spark.read.schema("x1 INT, x2 INT").csv(REF_CSV)
-    pts.repartition(2).write.parquet(str(src))
-    r = subprocess.run(
-        [
-            sys.executable, "-m", "pyspark_skyline_spark.cli",
-            "stream", "SKYLINE OF x1 MIN, x2 MIN", "MR_DIM", "8",
-            "--input-dir", str(src), "--output", str(out), "--cpus", "4",
-        ],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+    spark.read.schema("x1 INT, x2 INT").csv(path).repartition(2).write.parquet(str(src))
+    r = run_cli(
+        "stream", "SKYLINE OF x1 MIN, x2 MIN", "MR_DIM", "8",
+        "--input-dir", str(src), "--output", str(out), "--cpus", "4",
+        timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    got = spark.read.parquet(str(out)).select("x1", "x2").dropDuplicates()
-    assert got.count() == 12  # golden: 12 points (FIXTURES.md)
+    got = sorted(tuple(r) for r in spark.read.parquet(str(out)).select("x1", "x2").collect())
+    assert got == sweep_skyline_2d(pts)
 
 
 def test_cli_rejects_bad_query():
-    r = subprocess.run(
-        [sys.executable, "-m", "pyspark_skyline_spark.cli", "batch", "NOT A QUERY"],
-        capture_output=True, text=True, timeout=120, cwd="/root/repo",
-    )
+    r = run_cli("batch", "NOT A QUERY", timeout=120)
     assert r.returncode != 0
 
 

@@ -29,11 +29,16 @@ def empty_docs(spark):
     )
 
 
-def test_skyline_family_empty(spark, empty_pts):
+def test_skyline_family_empty(spark, empty_pts, monkeypatch):
+    import importlib
+
     dims = [("x", "min"), ("y", "min")]
     for algo in ("MR_DIM", "MR_GRID", "MR_ANGLE"):
         assert skyline(empty_pts, dims, algo=algo).count() == 0
-    assert skyline(empty_pts, dims, merge_strategy="broadcast").count() == 0
+    S = importlib.import_module("pyspark_skyline_spark.operators.skyline")
+    monkeypatch.setattr(S, "MERGE_STRATEGY", "broadcast")
+    assert skyline(empty_pts, dims).count() == 0
+    monkeypatch.undo()
     assert skyline_layers(empty_pts, dims, n_layers=2).count() == 0
     assert k_skyband(empty_pts, dims, k=2).count() == 0
     assert skyline(empty_pts, dims, by=["x"]).count() == 0

@@ -74,12 +74,15 @@ def test_datetime_dim():
     assert mask.tolist() == [True, True, True]
 
 
+#: small ints (ties and duplicates likely) plus the ordinary-value edges:
+#: ±inf and -0.0 (which equals 0.0)
+ELEM = st.one_of(
+    st.integers(0, 50).map(float), st.sampled_from([np.inf, -np.inf, -0.0, 0.0])
+)
+
+
 @given(
-    data=st.lists(
-        st.tuples(st.integers(0, 50), st.integers(0, 50), st.integers(0, 50)),
-        min_size=0,
-        max_size=120,
-    ),
+    data=st.lists(st.tuples(ELEM, ELEM, ELEM), min_size=0, max_size=120),
     senses=st.tuples(
         st.sampled_from(["min", "max"]),
         st.sampled_from(["min", "max"]),
@@ -95,6 +98,28 @@ def test_matches_bruteforce(data, senses):
     got = find_skyline_mask(cols, list(senses))
     want = brute_force_mask(cols, list(senses))
     assert got.tolist() == want.tolist()
+
+
+def test_opposite_infinities_keep_sum_order():
+    # (inf, -inf) has a NaN plain sum; it dominates (inf, -5) and must
+    # still be scanned first
+    rows = [(i, 10 - i) for i in range(11)] + [(np.inf, -5), (np.inf, -np.inf)]
+    arr = np.array(rows, dtype=np.float64)
+    cols = [arr[:, 0], arr[:, 1]]
+    got = find_skyline_mask(cols, ["min", "min"])
+    assert got.tolist() == brute_force_mask(cols, ["min", "min"]).tolist()
+    assert not got[11] and got[12]
+
+
+def test_tied_keys_across_chunks():
+    # equal scan keys with a dominator placed after its victim in input
+    # order, far enough apart to land in different BNL chunks
+    n = 5000
+    x = np.full(n, np.inf)
+    y = np.arange(n, 0, -1, dtype=np.float64)  # every key clips to the same value
+    cols = [x, y]
+    got = find_skyline_mask(cols, ["min", "min"])
+    assert np.nonzero(got)[0].tolist() == [n - 1]
 
 
 @given(

@@ -1,6 +1,9 @@
 """Batch skyline operator vs DuckDB oracle + cross-algorithm differential
 (SURVEY.md §5 test plan)."""
 
+import importlib
+import math
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -8,6 +11,9 @@ from pyspark.sql import functions as F
 from pyspark_skyline_spark import skyline, skyline_sql
 
 ALGOS = ["MR_DIM", "MR_GRID", "MR_ANGLE"]
+
+#: the operator module, whose merge/combiner constants tests override
+S = importlib.import_module("pyspark_skyline_spark.operators.skyline")
 
 
 def duck_skyline(parquet_path, cols, senses):
@@ -97,15 +103,16 @@ def test_partition_param_invariance(lineitem):
 
 
 def test_quantile_keying_equivalent_on_skewed_data(spark):
-    # heavily skewed first dim: equi-width would put ~everything in one
-    # cell; quantile keying must still give the exact same skyline
-    import math
+    # heavily skewed first dim: equi-width keying puts ~everything in one
+    # cell (the case quantile keying was once added for); every algorithm
+    # and partition count must still give the exact same skyline
     rows = [(math.exp(i / 50.0), float(i % 97)) for i in range(3000)]
     df = spark.createDataFrame(rows, "a double, b double")
     dims = [("a", "min"), ("b", "min")]
     base = spark_skyline_set(df, dims, algo="MR_DIM")
-    assert spark_skyline_set(df, dims, algo="MR_DIM_Q") == base
-    assert spark_skyline_set(df, dims, algo="MR_DIM_Q", partitions=7) == base
+    for algo in ALGOS[1:]:
+        assert spark_skyline_set(df, dims, algo=algo) == base, algo
+    assert spark_skyline_set(df, dims, algo="MR_DIM", partitions=7) == base
 
 
 def test_grid_pruning_all_sense_combos_d3(spark, sf_dir):
@@ -141,25 +148,26 @@ def test_grouped_grid_prune_matches_mr_dim(orders):
 def test_grouped_grid_prune_census_cap(orders):
     # over-cap census -> prune skipped (returns input unchanged); result
     # must still be exact either way
-    from pyspark_skyline_spark.operators import skyline as S
-
     dims = [("o_totalprice", "max"), ("o_orderdate", "min")]
     keyed = orders.withColumn(S._CELL, F.lit(0))
     capped = S._grid_prune_grouped(keyed, 2, 2, ["o_orderstatus"], max_census=1)
     assert capped is keyed  # skipped, not filtered
 
 
-def test_map_side_combine_equivalent(lineitem):
+def test_map_side_combine_equivalent(lineitem, monkeypatch):
     dims = [("l_extendedprice", "min"), ("l_quantity", "min")]
-    with_c = spark_skyline_set(lineitem, dims, map_side_combine=True)
-    without = spark_skyline_set(lineitem, dims, map_side_combine=False)
+    monkeypatch.setattr(S, "MAP_SIDE_COMBINE", True)
+    with_c = spark_skyline_set(lineitem, dims)
+    monkeypatch.setattr(S, "MAP_SIDE_COMBINE", False)
+    without = spark_skyline_set(lineitem, dims)
     assert with_c == without
 
 
-def test_map_side_combine_grouped(orders):
+def test_map_side_combine_grouped(orders, monkeypatch):
     dims = [("o_totalprice", "max"), ("o_orderdate", "min")]
     def run(combine):
-        res = skyline(orders, dims, by=["o_orderstatus"], map_side_combine=combine)
+        monkeypatch.setattr(S, "MAP_SIDE_COMBINE", combine)
+        res = skyline(orders, dims, by=["o_orderstatus"])
         return sorted(
             tuple(r)
             for r in res.select("o_orderstatus", "o_totalprice", "o_orderdate")
@@ -314,7 +322,14 @@ def test_grouped_grid_prune_keeps_null_group_keys(spark):
     assert {r for r in got if r[0] is None} == {(None, 1.0, 2.0), (None, 3.0, 1.0)}
 
 
-def test_broadcast_merge_matches_tree_on_anticorrelated(spark):
+def merged(df, dims, monkeypatch, **constants):
+    """Row set of ``skyline(df, dims)`` under overridden merge constants."""
+    for name, value in constants.items():
+        monkeypatch.setattr(S, name, value)
+    return {tuple(r) for r in skyline(df, dims).collect()}
+
+
+def test_broadcast_merge_matches_tree_on_anticorrelated(spark, monkeypatch):
     # adversarial shape for the final merge: anticorrelated dims put a
     # large fraction of rows on the frontier, where the tree merge's
     # final fold funnels everything through one kernel group and the
@@ -331,50 +346,38 @@ def test_broadcast_merge_matches_tree_on_anticorrelated(spark):
 
     df = spark.createDataFrame(pd.DataFrame(arr, columns=cols))
     dims = [(c, "min") for c in cols]
-    tree = {tuple(r) for r in skyline(df, dims, merge_strategy="tree").collect()}
-    bcast = {tuple(r) for r in skyline(df, dims, merge_strategy="broadcast").collect()}
+    tree = merged(df, dims, monkeypatch, MERGE_STRATEGY="tree")
+    bcast = merged(df, dims, monkeypatch, MERGE_STRATEGY="broadcast")
     # auto with a tiny threshold must take the broadcast path and agree
-    auto = {
-        tuple(r)
-        for r in skyline(df, dims, merge_strategy="auto", broadcast_threshold=8).collect()
-    }
+    auto = merged(df, dims, monkeypatch, MERGE_STRATEGY="auto", BROADCAST_THRESHOLD=8)
     assert tree == bcast == auto
     assert len(tree) > 100  # genuinely wide frontier, not a trivial case
 
 
-def test_broadcast_merge_cap_falls_back_to_tree(spark):
-    # past broadcast_cap the candidates are never collected; the tree
+def test_broadcast_merge_cap_falls_back_to_tree(spark, monkeypatch):
+    # past BROADCAST_CAP the candidates are never collected; the tree
     # fallback must still produce the same frontier
     rows = [(float(i), float(100 - i)) for i in range(100)] + [(50.0, 50.0)]
     df = spark.createDataFrame(rows, "x double, y double")
     dims = [("x", "min"), ("y", "min")]
-    capped = {
-        tuple(r)
-        for r in skyline(
-            df, dims, merge_strategy="auto", broadcast_threshold=2, broadcast_cap=5
-        ).collect()
-    }
-    tree = {tuple(r) for r in skyline(df, dims, merge_strategy="tree").collect()}
+    capped = merged(
+        df, dims, monkeypatch, MERGE_STRATEGY="auto", BROADCAST_THRESHOLD=2, BROADCAST_CAP=5
+    )
+    tree = merged(df, dims, monkeypatch, MERGE_STRATEGY="tree")
     assert capped == tree
 
 
-def test_broadcast_merge_handles_timestamp_dims(spark, sf_dir):
+def test_broadcast_merge_handles_timestamp_dims(spark, sf_dir, monkeypatch):
     # datetime64 dims go through to_min_space on both sides of the
     # broadcast filter (driver collect + executor batches)
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     dims = [("value", "min"), ("ts", "min")]
-    tree = {
-        (r.value, r.ts)
-        for r in skyline(df, dims, merge_strategy="tree").select("value", "ts").collect()
-    }
-    bcast = {
-        (r.value, r.ts)
-        for r in skyline(df, dims, merge_strategy="broadcast").select("value", "ts").collect()
-    }
+    tree = merged(df, dims, monkeypatch, MERGE_STRATEGY="tree")
+    bcast = merged(df, dims, monkeypatch, MERGE_STRATEGY="broadcast")
     assert tree == bcast
 
 
-def test_broadcast_merge_property_vs_antijoin(spark):
+def test_broadcast_merge_property_vs_antijoin(spark, monkeypatch):
     # property differential: the broadcast-merged kernel path must agree
     # with the declarative NOT EXISTS anti-join on random mixed-sense
     # frames (duplicates likely at this value range)
@@ -400,12 +403,11 @@ def test_broadcast_merge_property_vs_antijoin(spark):
     def check(rows, senses):
         df = spark.createDataFrame(rows, "a long, b long, c long")
         dims = list(zip(["a", "b", "c"], senses))
-        got = sorted(
-            map(tuple, skyline(df, dims, merge_strategy="broadcast").collect())
-        )
+        got = sorted(map(tuple, skyline(df, dims).collect()))
         want = sorted(map(tuple, skyline_antijoin(df, dims).collect()))
         assert got == want
 
+    monkeypatch.setattr(S, "MERGE_STRATEGY", "broadcast")
     check()
 
 

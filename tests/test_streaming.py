@@ -52,3 +52,19 @@ def test_result_before_update_raises():
     state = SkylineStreamState(DIMS)
     with pytest.raises(ValueError):
         state.result()
+
+
+def test_query_string_dims_stream_equals_batch(spark, sf_dir, tmp_path):
+    # a "SKYLINE OF" string reaches the count-gated frontier reduce from
+    # the second micro-batch on; it must give the batch skyline
+    from pyspark_skyline_spark.streaming.skyline_stream import run_skyline_stream
+
+    query = "SKYLINE OF o_totalprice MAX, o_orderdate MIN"
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    src = str(tmp_path / "src")
+    orders.repartition(3).write.parquet(src)
+    stream = spark.readStream.schema(orders.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    state, q = run_skyline_stream(stream, query)
+    q.awaitTermination()
+    assert len(q.recentProgress) >= 2
+    assert frontier_set(state.result()) == frontier_set(skyline(orders, query))
